@@ -17,7 +17,6 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from architxt_spark.functions.text import _memo_expr
 from architxt_spark.session import stage_barrier
 
 LSH_PLANES = 8
@@ -387,22 +386,17 @@ def lsh_bucket(vec: Column, dim: int, n_planes: int = LSH_PLANES) -> Column:
     ``vec`` (usually a cast of the stored float array) is bound once via
     ``_let`` — the per-plane dot products would otherwise re-evaluate the
     cast/allocation once per plane (interpreted HOF trees have no
-    common-subexpression elimination).  Memoized per JVM
-    (``text._memo_expr``): the n_planes × dim literal hyperplanes cost
-    ~590 ms of py4j round trips per construction."""
-    return _lsh_bucket_build(vec, dim, n_planes)
-
-
-@_memo_expr
-def _lsh_bucket_build(vec: Column, dim: int, n_planes: int) -> Column:
+    common-subexpression elimination).  Each hyperplane is one parsed
+    ``array(<x>D, ...)`` literal: ``dim`` ``F.lit`` calls per plane cost
+    that many py4j round trips."""
     from architxt_spark.functions.text import _let
 
     def mk(v: Column) -> Column:
         bits = []
         for p in range(n_planes):
-            plane = _plane(p, dim)
+            plane = F.expr("array(" + ", ".join(f"{x!r}D" for x in _plane(p, dim)) + ")")
             d = F.aggregate(
-                F.zip_with(v, F.array(*[F.lit(x) for x in plane]), lambda a, b: a * b),
+                F.zip_with(v, plane, lambda a, b: a * b),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             )

@@ -138,6 +138,13 @@ def curate_corpus(
             "quality_model_weights and quality_model_pos/neg are mutually "
             "exclusive (pass seed frames to train, or a trained model)"
         )
+    # the stages below add and drop these columns on the caller's frame
+    for col in ("__c4_clean", "__cls_keep"):
+        if col in docs.columns:
+            raise ValueError(
+                f"docs has column {col!r}, which curate_corpus uses internally; "
+                "rename it before curating"
+            )
     # materialize the gate's survivors ONCE: the census, the fingerprint
     # pass, and the minhash index all read this frame, and re-evaluating
     # the (shingle-heavy) quality predicate per consumer benched 33 s vs

@@ -215,11 +215,9 @@ def minhash_signature(col: Column, k: int = MINHASH_K) -> Column:
     return minhash_signature_of_ints(hs, k)
 
 
-@T._memo_expr
 def minhash_bands(sig: Column, k: int = MINHASH_K, band_size: int = MINHASH_BAND_SIZE) -> Column:
     """LSH band keys derived from an ALREADY-COMPUTED signature column —
-    never recomputes the signature.  Memoized per JVM (``text._memo_expr``
-    — 84 ms of py4j construction per call otherwise)."""
+    never recomputes the signature."""
     return F.array(*[
         F.concat(
             F.lit(f"{b}:"),
@@ -253,9 +251,14 @@ def shingle_md5_rows(
         .select("id", F.md5(F.col("s")).alias("m"))
         .persist()
     )
-    n = rows.count()  # eager: hash once; every consumer reads the cache
-    for h in holds:
-        h.unpersist()
+    try:
+        n = rows.count()  # eager: hash once; every consumer reads the cache
+    except BaseException:
+        rows.unpersist()
+        raise
+    finally:
+        for h in holds:
+            h.unpersist()
     return rows, n
 
 
@@ -374,12 +377,12 @@ def _signature_frame(
     )
 
 
-@T._memo_expr
 def _minhash_min_aggs() -> list:
     """The 16 permutation-min aggregate expressions over the shingle-hash
-    column ``h`` — pure literals, memoized per JVM (py4j construction)."""
+    column ``h``.  Each is parsed from one SQL string: one py4j call per
+    aggregate instead of the ~9 a ``Column`` composition costs."""
     return [
-        F.min((F.col("h") * _MINHASH_A[i] + _MINHASH_B[i]) % _MINHASH_MOD).alias(f"m{i}")
+        F.expr(f"min((h * {_MINHASH_A[i]} + {_MINHASH_B[i]}) % {_MINHASH_MOD})").alias(f"m{i}")
         for i in range(MINHASH_K)
     ]
 

@@ -8,8 +8,6 @@ are built-in-function expressions (whole-stage codegen; no Python UDFs).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,104 +30,6 @@ ALL_STOPWORDS: tuple[str, ...] = tuple(w for _, ws in LANG_MARKERS for w in ws)
 # ---------------------------------------------------------------------------
 # Spark column forms
 # ---------------------------------------------------------------------------
-
-
-#: memoized composite expressions — see :func:`_memo_expr`
-_EXPR_CACHE: dict = {}
-
-#: cache-size bound: the engine's own call sites build a few dozen
-#: distinct composite trees; anything past this means a long-lived
-#: session is generating keys programmatically and should stop caching
-#: the oldest rather than grow without limit
-_EXPR_CACHE_MAX = 1024
-
-#: applicationId the cache was filled under — a restarted SparkContext
-#: invalidates every wrapped java reference, so the cache clears when
-#: the id changes (``id(jvm)`` was the earlier token; a dead JVMView's
-#: address can be RECYCLED by a new view after GC, which would serve
-#: Column trees wrapping dead java objects)
-_EXPR_CACHE_APP: list = [None]
-
-#: resolved AttributeReferences print as ``name#<exprId>`` in the java
-#: node string; unresolved trees (F.col/F.lit compositions) never do
-_RESOLVED_RE = re.compile(r"#\d")
-
-
-#: sentinel: "this Column contains resolved attributes — do not cache"
-_UNCACHEABLE = object()
-
-
-def _column_key(c: Column):
-    """Cache-key token for a Column argument, or :data:`_UNCACHEABLE` when
-    the tree must NOT be cached.  ``str(Column)`` pretty-prints WITHOUT
-    expression IDs, so two RESOLVED columns from different DataFrames
-    (``df1['text']`` vs ``df2['text']``) print identically — caching one
-    would bind the other frame's plan to the wrong attribute
-    (MISSING_ATTRIBUTES on select, or a silent wrong-side bind in a
-    join).  The java node string DOES carry exprIds (``text#0``) but also
-    call-site origins, which would defeat the cache for unresolved trees
-    — so it is used only as a detector: any ``name#id`` occurrence means
-    resolved attributes are present and the call bypasses the cache
-    entirely."""
-    node = c._jc.node().toString()
-    if _RESOLVED_RE.search(node):
-        return _UNCACHEABLE
-    return str(c)
-
-
-def _memo_expr(fn):
-    """Memoize a Column-composite builder per (application, argument
-    expressions).
-
-    The composites below are pure functions of their argument EXPRESSIONS
-    (unresolved trees; no session or data dependence), yet building one
-    costs 40–160 ms of py4j round trips (measured: ``gopher_keep`` 163 ms,
-    ``c4_clean`` 82 ms, ``lang_id`` 58 ms per construction) — and the
-    query registry rebuilds them on every call.  The key uses each Column
-    argument's printed expression plus the active ``applicationId`` (a
-    new application clears the cache rather than reusing dead java
-    references).  Columns whose tree contains RESOLVED attributes bypass
-    the cache — see :func:`_column_key`.  Reusing one tree at several
-    places in a plan is safe: lambda-variable names come from a
-    JVM-global atomic counter, so cached trees can nest inside newer
-    lambdas without capture."""
-    import functools
-
-    from pyspark import SparkContext
-
-    @functools.wraps(fn)
-    def wrapped(*args, **kwargs):
-        sc = SparkContext._active_spark_context
-        if sc is None:
-            return fn(*args, **kwargs)
-        try:
-            app_id = sc.applicationId
-            arg_keys = tuple(
-                _column_key(a) if isinstance(a, Column) else a for a in args
-            )
-            kw_keys = tuple(
-                (k, _column_key(v) if isinstance(v, Column) else v)
-                for k, v in sorted(kwargs.items())
-            )
-            if _UNCACHEABLE in arg_keys or any(
-                k is _UNCACHEABLE for _, k in kw_keys
-            ):
-                return fn(*args, **kwargs)  # resolved attributes: never cache
-            key = (fn.__name__, arg_keys, kw_keys)
-        except Exception:  # noqa: BLE001 — unhashable/unprintable args
-            return fn(*args, **kwargs)
-        if _EXPR_CACHE_APP[0] != app_id:
-            _EXPR_CACHE.clear()
-            _EXPR_CACHE_APP[0] = app_id
-        out = _EXPR_CACHE.get(key)
-        if out is None:
-            out = fn(*args, **kwargs)
-            while len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-                _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
-            _EXPR_CACHE[key] = out
-        return out
-
-    return wrapped
 
 
 def _let(col: Column, body) -> Column:
@@ -165,7 +65,6 @@ def token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(r"\S+"))
 
 
-@_memo_expr
 def distinct_token_ratio(col: Column) -> Column:
     """share of distinct tokens — a repetitiveness signal."""
     return _let(
@@ -189,7 +88,6 @@ def _marker_hits(col: Column, words: tuple[str, ...]) -> Column:
     )
 
 
-@_memo_expr
 def lang_id(col: Column) -> Column:
     """Stopword-hit language heuristic: argmax of marker hits per language,
     'und' when no marker hits; ties → first language in LANG_MARKERS.
@@ -223,7 +121,6 @@ def punct_ratio(col: Column) -> Column:
     return F.when(n > 0, p / n).otherwise(F.lit(0.0))
 
 
-@_memo_expr
 def stopword_ratio(col: Column) -> Column:
     return _let(
         token_count(col),
@@ -233,7 +130,6 @@ def stopword_ratio(col: Column) -> Column:
     )
 
 
-@_memo_expr
 def quality_score(col: Column) -> Column:
     """weighted combination of alpha ratio, non-punctuation ratio, and
     stopword ratio — the length/punct/stopword quality heuristic."""
@@ -402,7 +298,6 @@ def shingles_of_tokens(t: Column, n: int = 3) -> Column:
     )
 
 
-@_memo_expr
 def shingles(col: Column, n: int = 3) -> Column:
     """word n-gram shingles (space-joined), [] when fewer than n tokens."""
     return shingles_of_tokens(tokens(col), n)
@@ -493,7 +388,6 @@ def shingles_sql(col: str, n: int = 3) -> str:
 # repetition / PII / contamination (training-data hygiene family)
 # ---------------------------------------------------------------------------
 
-@_memo_expr
 def dup_ngram_fraction(col: Column, n: int = 2) -> Column:
     """Repetition score: fraction of word n-grams that are repeats
     (Gopher-style repetition signal re-expressed for single-line corpora:
@@ -537,7 +431,6 @@ def pii_count_sql(col: str, kind: str) -> str:
     return f"len(regexp_extract_all({col}, '{pattern}'))"
 
 
-@_memo_expr
 def redact_pii(col: Column) -> Column:
     """Replace every PII match with its placeholder, chained in
     ``PII_PATTERNS`` order (email before ipv4/phone so digit runs inside
@@ -559,7 +452,6 @@ def redact_pii_sql(col: str) -> str:
 # rolling-hash fingerprints (winnowing) + BPE-ish token counting
 # ---------------------------------------------------------------------------
 
-@_memo_expr
 def shingle_fingerprints(col: Column, n: int = 3) -> Column:
     """Rolling window fingerprints: one md5 per word n-gram (md5 because it
     is the hash both engines share bit-for-bit — the oracle twin must
@@ -593,7 +485,6 @@ def winnow_of_hashes(h: Column, w: int = 4) -> Column:
     return F.array_distinct(mins)
 
 
-@_memo_expr
 def winnow_fingerprints(col: Column, n: int = 3, w: int = 4) -> Column:
     """Winnowing (MOSS-style document fingerprint): the minimum shingle
     hash of each sliding window of ``w`` consecutive n-gram hashes,
@@ -623,7 +514,6 @@ def winnow_fingerprints_sql(col: str, n: int = 3, w: int = 4) -> str:
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\s]+"
 
 
-@_memo_expr
 def bpe_token_count(col: Column) -> Column:
     """Token count under a BPE-style pre-tokenization (letters / digit
     triples / punctuation runs) — the whitespace count underestimates
@@ -1036,7 +926,6 @@ def corpus_drift_sql(
     """
 
 
-@_memo_expr
 def gopher_keep(col: Column) -> Column:
     """The Gopher composite keep decision as one boolean column — the
     rule set `__spark_entry__.q_gopher_quality_flags` reports flag-by-flag
@@ -1113,14 +1002,12 @@ def _c4_line_keep(line: Column) -> Column:
     return _let(F.trim(line), check)
 
 
-@_memo_expr
 def c4_clean(col: Column) -> Column:
     """Cleaned page text: newline-joined subset of lines passing
     :func:`_c4_line_keep`.  No shuffle — a scan-side projection."""
     return F.array_join(F.filter(F.split(col, "\n"), _c4_line_keep), "\n")
 
 
-@_memo_expr
 def c4_keep(col: Column, cleaned: Column) -> Column:
     """C4 page-level keep decision: the page (original text) contains no
     ``lorem ipsum`` and no curly brace (code), and the CLEANED text still

@@ -152,6 +152,33 @@ def cluster_conf(
     }
 
 
+#: applicationId -> {key: artifact}; holds at most the current application
+_ARTIFACTS: dict = {}
+
+
+def artifact(spark: SparkSession, key: tuple, build):
+    """The session's build-once artifact under ``key`` (a tuple whose
+    first item names the artifact), calling ``build()`` on the first
+    lookup.  Entries are keyed by ``applicationId``: the first lookup
+    under a new application drops every older entry, since a restarted
+    SparkContext invalidates the java objects and frames they wrap."""
+    app_id = spark.sparkContext.applicationId
+    store = _ARTIFACTS.get(app_id)
+    if store is None:
+        _ARTIFACTS.clear()
+        store = _ARTIFACTS[app_id] = {}
+    if key not in store:
+        store[key] = build()
+    return store[key]
+
+
+def clear_artifacts(name: str) -> None:
+    """Drop every artifact named ``name``; the next lookup rebuilds it."""
+    for store in _ARTIFACTS.values():
+        for key in [k for k in store if k[0] == name]:
+            del store[key]
+
+
 def read_parquet_if_exists(spark: SparkSession, path: str):
     """Read a parquet directory, or return ``None`` when the PATH does not
     exist yet (the bootstrap case for append-only sidecar state: band /

@@ -40,12 +40,12 @@ position assignment is one window over the child descriptors.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from architxt_spark.model import NODE_SCHEMA
-from architxt_spark.session import stage_barrier
+from architxt_spark.session import artifact, stage_barrier
 
 
 def get_root_nodes(nodes: DataFrame, rels: DataFrame) -> DataFrame:
@@ -204,13 +204,8 @@ def _group_structs(
     return structs
 
 
-#: memoized emission expressions keyed by (applicationId, namespace,
-#: node_props, rel_props) — see :func:`_emission_array`
-_EMISSION_CACHE: dict = {}
-
-
 def _emission_array(
-    app_id: str, namespace: str, node_props: tuple, rel_props: tuple
+    spark: SparkSession, namespace: str, node_props: tuple, rel_props: tuple
 ) -> Column:
     """The per-child-row emission expression: a conditional struct array
     over ``(__kind, __attributed, __sub)``, exploded by :func:`read_graph`.
@@ -219,18 +214,16 @@ def _emission_array(
     reference is an unresolved ``F.col``), yet building it costs ~2 s of
     py4j round-trips per call (~33 ten-field structs) — measured as the
     single largest driver-side term of a ``read_graph`` call, with zero
-    cluster work.  Memoized per (application, namespace, schema) so
-    repeated loads reuse the unresolved tree; keyed on the application id
-    because a restarted JVM invalidates the wrapped java objects."""
-    key = (app_id, namespace, node_props, rel_props)
-    cached = _EMISSION_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # a new application invalidates every wrapped java reference — evict
-    # dead-app entries instead of accumulating them across restarts
-    for stale in [k for k in _EMISSION_CACHE if k[0] != app_id]:
-        del _EMISSION_CACHE[stale]
+    cluster work.  Built once per (namespace, schema) as a session
+    artifact, so repeated loads reuse the unresolved tree."""
+    return artifact(
+        spark,
+        ("graph_emission", namespace, node_props, rel_props),
+        lambda: _build_emission_array(namespace, node_props, rel_props),
+    )
 
+
+def _build_emission_array(namespace: str, node_props: tuple, rel_props: tuple) -> Column:
     node_oid = _oid("node", namespace, F.col("nid"))
     src_oid = _oid("node", namespace, F.col("src"))
     dst_oid = _oid("node", namespace, F.col("dst"))
@@ -289,9 +282,7 @@ def _emission_array(
     for cond, structs in reversed(branches):
         a = F.array(*structs)
         arr = a if arr is None else F.when(cond, a).otherwise(arr)
-    arr = F.filter(arr, lambda x: x.isNotNull())
-    _EMISSION_CACHE[key] = arr
-    return arr
+    return F.filter(arr, lambda x: x.isNotNull())
 
 
 def read_graph(
@@ -401,7 +392,7 @@ def read_graph(
     )
 
     arr = _emission_array(
-        children.sparkSession.sparkContext.applicationId,
+        children.sparkSession,
         namespace,
         tuple(node_props),
         tuple(rel_props),

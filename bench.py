@@ -141,6 +141,7 @@ def main() -> None:
         print(f"# jvm-nfc unavailable (Arrow fallback): {e}", file=sys.stderr)
 
     import __spark_entry__ as entry_mod
+    from architxt_spark.session import clear_artifacts
 
     qs = entry_mod.queries()
 
@@ -180,30 +181,24 @@ def main() -> None:
     # Builds obey the SAME repeated-minima protocol as queries (r11 fix:
     # single cold draws conflated first-execution JIT + host noise with
     # build cost — a lone draw measured pq_encode at 13x its steady
-    # state).  The per-artifact memo is cleared before every draw so each
-    # repeat is a genuine rebuild; the last draw leaves the artifact
-    # cached for the serving-side query lines below.
+    # state).  Each artifact is cleared before every draw so each repeat
+    # is a genuine rebuild; the last draw leaves the artifact cached for
+    # the serving-side query lines below.
     builds = [
-        ("ivf_build", None,
-         lambda: entry_mod.ivf_serving_index(spark, sf_dir, rebuild=True)),
-        ("pq_encode", entry_mod._PQ_CODES_CACHE,
-         lambda: entry_mod.pq_serving_codes(spark, sf_dir)),
-        ("quality_fit", entry_mod._QUALITY_MODEL_CACHE,
-         lambda: entry_mod.quality_model_weights(spark, sf_dir)),
-        ("curation_fit", entry_mod._CURATION_MODEL_CACHE,
-         lambda: entry_mod.curation_model_weights(spark, sf_dir)),
-        ("dsir_fit", entry_mod._DSIR_MODEL_CACHE,
-         lambda: entry_mod.dsir_model(spark, sf_dir)),
+        ("ivf_build", "ivf_index", entry_mod.ivf_serving_index),
+        ("pq_encode", "pq_codes", entry_mod.pq_serving_codes),
+        ("quality_fit", "quality_model", entry_mod.quality_model_weights),
+        ("curation_fit", "curation_model", entry_mod.curation_model_weights),
+        ("dsir_fit", "dsir_model", entry_mod.dsir_model),
     ]
     timings: dict[str, float] = {}
     build_total = 0.0
-    for bname, cache, bfn in builds:
+    for bname, artifact_name, bfn in builds:
         best = None
         for _ in range(repeats):
-            if cache is not None:
-                cache.clear()
+            clear_artifacts(artifact_name)
             t0 = time.perf_counter()
-            bfn()
+            bfn(spark, sf_dir)
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         timings[bname] = round(best, 3)

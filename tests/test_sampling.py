@@ -537,14 +537,18 @@ def test_ann_recall_indexed_matches_in_memory_ivf(spark, tmp_path):
 
 def test_ivf_serving_index_memoized(spark):
     """The session-level serving index builds once per (session, sf) and
-    is reused by ann_suite/ann_recall; rebuild=True forces a fresh dir."""
+    is reused by ann_suite/ann_recall; clearing the artifact forces a
+    fresh dir."""
     import __spark_entry__ as E
+
+    from architxt_spark.session import clear_artifacts
 
     sf = "/root/testdata/sf0.001"
     p1, cb1 = E.ivf_serving_index(spark, sf)
     p2, cb2 = E.ivf_serving_index(spark, sf)
     assert p1 == p2 and cb1 is cb2
-    p3, _ = E.ivf_serving_index(spark, sf, rebuild=True)
+    clear_artifacts("ivf_index")
+    p3, _ = E.ivf_serving_index(spark, sf)
     assert p3 != p1
     p4, _ = E.ivf_serving_index(spark, sf)
     assert p4 == p3
